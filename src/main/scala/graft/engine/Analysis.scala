@@ -15,24 +15,31 @@ object Analysis {
     * / aqi_pm25 when the column is absent or entirely null, and null-fill
     * any missing pollutant column first
     * (ETL_Multi_Lvl_API/etl_analysis.py:146-165). The "all null" probe is
-    * one tiny aggregate job over the needed columns only. */
+    * one aggregate job over the derived columns present, none if absent;
+    * a re-derived column never feeds another's probe, so all three probe
+    * the input. */
   def ensureDerived(df0: DataFrame): DataFrame = {
     val df = Schemas.pollutants.foldLeft(df0)((d, c) =>
       if (d.schema.fieldNames.contains(c)) d
       else d.withColumn(c, lit(null).cast("double")))
-    def missingOrAllNull(d: DataFrame, c: String): Boolean =
-      !d.schema.fieldNames.contains(c) ||
-        d.agg(count(col(c))).head().getLong(0) == 0L
+    val present = Seq("severity", "risk_class", "aqi_pm25").filter(df.columns.contains)
+    val nonNull: Map[String, Long] =
+      if (present.isEmpty) Map.empty
+      else {
+        val r = df.select(present.map(c => count(col(c))): _*).head()
+        present.zipWithIndex.map { case (c, i) => c -> r.getLong(i) }.toMap
+      }
+    def missingOrAllNull(c: String): Boolean = nonNull.getOrElse(c, 0L) == 0L
     val withSev =
-      if (missingOrAllNull(df, "severity"))
+      if (missingOrAllNull("severity"))
         df.withColumn("severity", Features.severity(col("pm2_5"), col("pm10"),
           col("nitrogen_dioxide"), col("sulphur_dioxide"), col("carbon_monoxide"), col("ozone")))
       else df
     val withRisk =
-      if (missingOrAllNull(withSev, "risk_class"))
+      if (missingOrAllNull("risk_class"))
         withSev.withColumn("risk_class", Features.riskClass(col("severity")))
       else withSev
-    if (missingOrAllNull(withRisk, "aqi_pm25"))
+    if (missingOrAllNull("aqi_pm25"))
       withRisk.withColumn("aqi_pm25", Features.aqiCategory(col("pm2_5")))
     else withRisk
   }

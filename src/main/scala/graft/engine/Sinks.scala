@@ -25,6 +25,25 @@ object Sinks {
     df.coalesce(1).write.mode(SaveMode.Overwrite)
       .option("header", true).csv(path)
 
+  /** Runs independent writes at once, one thread each, and returns their
+    * results in input order. The pool lives for this call only: its
+    * threads are spawned by the caller and so inherit the caller's Spark
+    * local properties (job group, scheduler pool, ...), which threads of
+    * a shared pool would not. Waits for every write; if any failed,
+    * rethrows the first failure (in input order). */
+  private[graft] def concurrently[T](writes: Seq[() => T]): Seq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import scala.util.{Failure, Try}
+    val pool = Executors.newFixedThreadPool(math.max(1, writes.size))
+    try {
+      val done = writes.map(w => pool.submit(new Callable[T] { def call(): T = w() }))
+        .map(f => Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
+      val failures = done.collect { case Failure(e) => e }
+      failures.headOption.foreach { first => failures.tail.foreach(first.addSuppressed); throw first }
+      done.map(_.get)
+    } finally pool.shutdown()
+  }
+
   /** Bucketed catalog table: pre-shuffles the data into `n` buckets on
     * the join/agg key at WRITE time, so every later co-bucketed join or
     * aggregation on that key runs with ZERO exchanges — the storage-side

@@ -56,30 +56,25 @@ object StreamQueries {
     * FileStreamSource admits new files oldest-mtime-first (latestFirst
     * defaults false), so a maxFilesPerTrigger=1 stream over `in`
     * drains them in slice order within ONE stream lifetime. The slice
-    * writes are independent jobs and run CONCURRENTLY (guide §2.6 —
-    * the prior drive loops paid nSplits sequential single-task encodes
-    * of the same source frame); the rename+setTimes pass afterwards is
-    * pure driver-side FS metadata, so the pinned order costs nothing. */
+    * writes are independent jobs and run CONCURRENTLY
+    * (`Sinks.concurrently`, so they carry the caller's local
+    * properties); the rename+setTimes pass afterwards is pure
+    * driver-side FS metadata, so the pinned order costs nothing. */
   private def writeOrderedSlices(s: SparkSession, slices: Seq[DataFrame],
                                  in: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val inPath = new org.apache.hadoop.fs.Path(in)
     val fs = inPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.mkdirs(inPath)
-    val staged = slices.zipWithIndex.map { case (df, k) =>
-      Future {
-        val tmp = new org.apache.hadoop.fs.Path(s"$in/_slice$k")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        // exactly one data file by coalesce(1)
-        val part = fs.listStatus(tmp).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).head
-        (k, tmp, part)
-      }
-    }
+    val staged = Sinks.concurrently(slices.zipWithIndex.map { case (df, k) => () =>
+      val tmp = new org.apache.hadoop.fs.Path(s"$in/_slice$k")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      // exactly one data file by coalesce(1)
+      val part = fs.listStatus(tmp).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).head
+      (k, tmp, part)
+    })
     val t0 = System.currentTimeMillis
-    staged.map(Await.result(_, Duration.Inf)).sortBy(_._1).foreach {
+    staged.foreach {
       case (k, tmp, part) =>
         val dst = new org.apache.hadoop.fs.Path(inPath, f"slice$k%02d.parquet")
         if (!fs.rename(part, dst))

@@ -17,7 +17,7 @@ class FetchSpec extends SparkSpec {
   private val weatherBody =
     """{"city": "hyderabad", "hourly": {"temperature_2m": [31.5, 32.0]}}"""
 
-  test("happy path: params encode into the URL, body lands as <key>_raw_<ts>.json") {
+  test("happy path: params encode into the URL, body lands as <key>_<8hex>_raw_<ts>.json") {
     val dir = tmp
     var seen: List[String] = Nil
     val transport = (url: String, _: Int) => { seen ::= url; weatherBody }
@@ -29,7 +29,7 @@ class FetchSpec extends SparkSpec {
     // params URL-encoded, deterministic (name-sorted) order
     assert(seen == List("http://x.test/v1/latest?city=New+Delhi&limit=100"))
     val path = res.head.rawPath.get
-    assert(path.matches(".*/new_delhi_raw_\\d{8}T\\d{6}Z\\.json$"),
+    assert(path.matches(".*/new_delhi_[0-9a-f]{8}_raw_\\d{8}T\\d{6}Z\\.json$"),
       s"landed name must follow the raw-layer convention: $path")
     // valid JSON bodies land VERBATIM
     assert(new String(Files.readAllBytes(java.nio.file.Paths.get(

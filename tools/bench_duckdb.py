@@ -31,17 +31,16 @@ def _run_delay_ns() -> int:
     process's threads — the same /proc/self/task/*/schedstat gauge
     graft.Bench samples, so the DuckDB sessions carry a contention
     gauge symmetric to the Spark sessions' rq_ms (r21 ADVICE: a
-    one-sided gate could only bias the published ratio). -1 off-Linux."""
-    try:
-        total = 0
-        for p in glob.glob("/proc/self/task/*/schedstat"):
-            try:
-                total += int(open(p).read().split()[1])
-            except (OSError, IndexError, ValueError):
-                pass
-        return total
-    except OSError:
-        return -1
+    one-sided gate could only bias the published ratio). -1 when no
+    schedstat file could be read (off-Linux, or schedstats unavailable)."""
+    total, read = 0, 0
+    for p in glob.glob("/proc/self/task/*/schedstat"):
+        try:
+            total += int(open(p).read().split()[1])
+            read += 1
+        except (OSError, IndexError, ValueError):
+            pass
+    return total if read else -1
 
 
 def _box_self_jiffies():

@@ -40,10 +40,11 @@ def main() -> None:
         # table silently and misstate the published config
         assert s["sf"] == sessions[0]["sf"], "sessions ran different sf dirs"
         assert s.get("iters") == sessions[0].get("iters"), "sessions ran different iters"
-    # q.get(): sidecars predating the per-query rq gauge must still merge
-    # when the gate is not requested (r21 ADVICE — a bare q["rq_ms"] was a
-    # silent tightening of the accepted input format)
-    session_rq = [round(sum(max(q.get("rq_ms", 0.0), 0.0) for q in s["queries"]), 1)
+    # sidecars predating the per-query rq gauge still merge when the gate
+    # is not requested; such a session's gauge is null, not a 0.0 that
+    # reads like a quiet session
+    session_rq = [round(sum(max(q["rq_ms"], 0.0) for q in s["queries"]), 1)
+                  if all("rq_ms" in q for q in s["queries"]) else None
                   for s in sessions]
     if max_rq_ms is not None:
         missing = [p for p, s in zip(session_paths, sessions)
